@@ -23,6 +23,19 @@ def get_spark(
     shuffle partitions = cores (not the 200 default, which over-parallelizes
     local data and under-parallelizes 100 TB — on a real cluster set it to
     ~2-3x total executor cores or let AQE coalesce).
+
+    Python workers fork from ``map_reduce_ruby_spark.worker_daemon``
+    (``spark.python.daemon.module``). Why: before every task pyspark calls
+    ``importlib.invalidate_caches()``, and on CPython 3.11 that re-parses
+    the central directory of ``pyspark.zip`` (once per imported subpackage),
+    the py4j zip and the spark-core jar: ~0.2 CPU-s per Python task, even
+    an empty one. CPython 3.12 made that re-read lazy (gh-103200). The rule
+    the daemon applies: archives on ``sys.path`` when it starts are
+    immutable for a worker's lifetime and are read once per worker; later
+    archives (``addPyFile`` includes, the SparkFiles dir) are re-read per
+    task as before. Deployment: the daemon imports this package, so it must
+    be importable on every executor, as ``Job`` closures already require.
+    ``spark.executorEnv.PYTHONPATH`` carries the package root for that.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -58,6 +71,7 @@ def get_spark(
     # streaming state partitioning (state stores can't re-partition across
     # a checkpoint's lifetime).
     initial_parts = int(os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "256"))
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -83,6 +97,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow for every Python<->JVM hop (pandas UDFs, toPandas).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers fork from worker_daemon; see the docstring above.
+        .config("spark.python.daemon.module", "map_reduce_ruby_spark.worker_daemon")
+        # The daemon and every Job closure import this package on executors,
+        # whatever the driver's working directory. Spark merges this with
+        # the workers' own PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", package_root)
         # Oracle comparisons (DuckDB is UTC-naive) require a pinned session TZ.
         .config("spark.sql.session.timeZone", "UTC")
         # Parquet TIMESTAMP(NANOS) (events.ts) is unsupported by Spark's
