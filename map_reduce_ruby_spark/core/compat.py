@@ -240,30 +240,29 @@ class Mapper:
     def _shuffle_from_spills(
         self, reduce_fn: Callable | None, n_parts: int, out: str
     ) -> dict[int, str]:
-        """Shuffle from the spilled chunk files: each chunk becomes one
-        task's streamed input (a chunk is at most ~memory_limit bytes by
-        construction — no task re-buffers the whole dataset), lines parse
-        back to (key, value), and the SAME Job machinery as the unbounded
-        path partitions/sorts/folds them. FIFO stability holds end-to-end:
-        chunks spill in input order and the spill sort is stable, so
-        (chunk index, line number) — the order the union RDD yields and
-        ``stable=True`` sequences — preserves input order among equal
-        keys, matching the reference's FIFO k-way merge
-        (priority_queue.rb:35,50-53). Single-process façade contract: the
-        spill files live on the worker-local filesystem, shared with local
-        [k] executors; a porting user on a real cluster hands Job.run a
-        distributed source instead."""
+        """Shuffle from the spilled chunk files: the chunk list is sliced
+        like any driver list (``Job._as_rdd``: one slice per core), each
+        task streams its slice's chunks one after another, line by line (a
+        chunk is at most ~memory_limit bytes by construction — no task
+        re-buffers the whole dataset), lines parse back to (key, value),
+        and the SAME Job machinery as the unbounded path
+        partitions/sorts/folds them. FIFO stability holds end-to-end:
+        chunks spill in input order, slices are contiguous runs of the
+        list, and the spill sort is stable, so (chunk index, line number) —
+        the order the flattened RDD yields and ``stable=True`` sequences —
+        preserves input order among equal keys, matching the reference's
+        FIFO k-way merge (priority_queue.rb:35,50-53). Single-process
+        façade contract: the spill files live on the worker-local
+        filesystem, shared with local[k] executors; a porting user on a
+        real cluster hands Job.run a distributed source instead."""
         with self._ingest_lock:
             self._write_chunk()  # flush the tail buffer (mapper.rb:81)
             chunks, self._spill_chunks = self._spill_chunks, []
         try:
-            sc = self._spark.sparkContext
-            indexed = sc.parallelize(
-                list(enumerate(chunks)), numSlices=max(1, len(chunks))
-            )
+            paths = Job._as_rdd(self._spark, chunks)
 
-            def _lines(ip: tuple[int, str]) -> Iterator[str]:
-                with open(ip[1], encoding="utf-8") as f:
+            def _lines(path: str) -> Iterator[str]:
+                with open(path, encoding="utf-8") as f:
                     for line in f:
                         if line.strip():
                             yield line
@@ -279,7 +278,7 @@ class Mapper:
                 num_partitions=n_parts,
             )
             return job.shuffle_to_files(
-                self._spark, indexed.flatMap(_lines), out,
+                self._spark, paths.flatMap(_lines), out,
                 stable=reduce_fn is None,
             )
         finally:

@@ -602,6 +602,10 @@ class Job:
             return inputs
         if hasattr(inputs, "rdd"):  # DataFrame
             return inputs.rdd
+        # One slice per core, never an empty one: every Python task pays a
+        # fixed cost, and slices beyond the cores only queue behind them.
         sc: SparkContext = spark.sparkContext
         inputs = list(inputs)
-        return sc.parallelize(inputs, numSlices=max(1, min(len(inputs), 32)))
+        return sc.parallelize(
+            inputs, numSlices=max(1, min(len(inputs), sc.defaultParallelism))
+        )

@@ -41,11 +41,15 @@ def _spread(batch_df: DataFrame) -> DataFrame:
     count) runs on a single core while the rest idle — measured on the
     probe entry: addBatch is ~95% of drain time and the sketch task is
     serial (guide §2.6 idle capacity). Round-robin repartition spreads the
-    batch once (deterministic row placement via sort-before-repartition;
-    all downstream results are row-order-independent aggregates/appends,
-    so output is unchanged). Batches already wider than the core count — a
-    real day-batch at scale — pass through untouched, so this never
-    SHRINKS parallelism or adds a shuffle where width is adequate."""
+    batch once. This function does not sort: which row lands in which
+    partition is Spark's round-robin, and output does not depend on it,
+    because every downstream result is a row-order-independent aggregate
+    or append. (A retried task still reproduces its placement: Spark sorts
+    each input partition before a round-robin exchange while
+    ``spark.sql.execution.sortBeforeRepartition`` is on, its default.)
+    Batches already wider than the core count — a real day-batch at scale
+    — pass through untouched, so this never SHRINKS parallelism or adds a
+    shuffle where width is adequate."""
     sc = batch_df.sparkSession.sparkContext
     p = sc.defaultParallelism
     if batch_df.rdd.getNumPartitions() < p:

@@ -122,6 +122,15 @@ class TestMultiChunkReduce:
         assert result == {"a": 4, "bb": 9}
 
 
+class TestDriverListSlices:
+    # A driver-side list is cut into one slice per core, never an empty one:
+    # each slice is a Python task with a fixed cost.
+    def test_one_slice_per_core(self, spark):
+        cores = spark.sparkContext.defaultParallelism
+        assert Job._as_rdd(spark, range(1200)).getNumPartitions() == cores
+        assert Job._as_rdd(spark, ["a", "b", "c"]).getNumPartitions() == min(3, cores)
+
+
 class TestDistinctKeysNoReduce:
     # Ports spec/map_reduce/reducer_spec.rb:37-62: reduce impl only needed
     # when duplicate keys actually meet.

@@ -80,22 +80,29 @@ def test_add_py_file_after_workers_start_is_imported_and_reread(spark, tmp_path)
         import worker_daemon_late_include
 
         time.sleep(0.05)
-        ids = [
-            id(files)
+        directories = [
+            files
             for path, files in zipimport._zip_directory_cache.items()
             if path.endswith(os.sep + "worker_daemon_late_include.zip")
         ]
-        return os.getpid(), worker_daemon_late_include.VALUE, ids
+        # A marker left by an earlier task of this worker survives only in a
+        # directory that was not re-read since. (Comparing id()s does not
+        # work: a re-read directory can land where a freed one was.)
+        marker = "\0marker of an earlier task"
+        kept = [marker in files for files in directories]
+        for files in directories:
+            files[marker] = True
+        return os.getpid(), worker_daemon_late_include.VALUE, kept
 
     n = _tasks(sc)
     results = sc.parallelize(range(n), n).map(use_include).collect()
     assert [value for _, value, _ in results] == [42] * n
-    assert all(len(ids) == 1 for _, _, ids in results), results
+    assert all(len(kept) == 1 for _, _, kept in results), results
     # A late archive is outside the daemon's startup path: every task still
     # re-reads its directory, so a worker never holds one for two tasks.
-    by_pid = _by_pid((pid, ids[0]) for pid, _, ids in results)
-    for pid, ids in by_pid.items():
-        assert len(set(ids)) == len(ids), (pid, ids)
+    by_pid = _by_pid((pid, kept[0]) for pid, _, kept in results)
+    for pid, kept in by_pid.items():
+        assert not any(kept), (pid, kept)
 
 
 def test_job_runs_from_another_working_directory(tmp_path):

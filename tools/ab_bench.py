@@ -3,15 +3,16 @@
 VERDICT r10 item 2: one clean, driver-comparable record set — same epoch,
 back-to-back, 3 idle runs per code point, interleaved (r10, r11, r10, ...)
 so ambient drift hits both sides equally, ALL totals committed (not just
-the cleanest). Artifact /tmp stores are cleared before EVERY run so both
-sides pay identical cold-build costs inside the bench's own min-of-3
-methodology (the bench builds artifacts on run 1 and serves warm on runs
-2-3 within the process — the min therefore reports steady-state serving
-either way, but shared on-disk layouts must not leak one side's file
-layout into the other side's listing costs).
+the cleanest). Artifact stores in the temp dir (``TMPDIR``, else /tmp)
+are cleared before EVERY run so both sides pay identical cold-build costs
+inside the bench's own min-of-3 methodology (the bench builds artifacts on
+run 1 and serves warm on runs 2-3 within the process — the min therefore
+reports steady-state serving either way, but shared on-disk layouts must
+not leak one side's file layout into the other side's listing costs).
 
 Usage: python tools/ab_bench.py <r10_tree> <r11_tree> <out_dir> [pairs]
-Writes <out_dir>/r11_ab_{r10,r11}_run{i}.json and prints a summary JSON.
+Writes <out_dir>/r11_ab_{r10,r11}_run{i}.json, each run's bench stderr to
+the matching .log, and prints a summary JSON.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 
 ARTIFACT_PREFIXES = [
     "bm25_idx_v", "bpe_tok_v", "events_stream_", "ivf_cmp_idx_v",
@@ -34,24 +36,37 @@ ARTIFACT_PREFIXES = [
 
 
 def clear_artifacts() -> int:
+    """Remove the engine's artifact stores from the temp dir the bench's
+    stores use (``TMPDIR`` if set); return how many are really gone."""
     n = 0
     for pre in ARTIFACT_PREFIXES:
-        for p in glob.glob(os.path.join("/tmp", pre + "*")):
+        for p in glob.glob(os.path.join(tempfile.gettempdir(), pre + "*")):
             shutil.rmtree(p, ignore_errors=True)
-            n += 1
+            if not os.path.lexists(p):
+                n += 1
     return n
 
 
 def run_bench(tree: str, out_json: str) -> dict:
+    """Run ``bench.py`` in ``tree``; its stderr goes to a ``.log`` beside
+    ``out_json``, and a failure quotes that log's tail."""
     env = dict(os.environ)
     env["BENCH_OUT"] = out_json
     env.setdefault("SPARK_GRAFT_CPUS", "32")
-    proc = subprocess.run(
-        [sys.executable, "bench.py"], cwd=tree, env=env,
-        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(f"bench failed in {tree}: rc={proc.returncode}")
+    log_path = os.path.splitext(out_json)[0] + ".log"
+    with open(log_path, "w", encoding="utf-8") as log:
+        proc = subprocess.run(
+            [sys.executable, "bench.py"], cwd=tree, env=env,
+            stdout=subprocess.PIPE, stderr=log, text=True,
+        )
+    if proc.returncode != 0 or not os.path.exists(out_json):
+        with open(log_path, encoding="utf-8", errors="replace") as f:
+            tail = f.read()[-3000:]
+        raise RuntimeError(
+            f"bench failed in {tree}: rc={proc.returncode}, "
+            f"{out_json} {'written' if os.path.exists(out_json) else 'missing'}; "
+            f"stderr tail ({log_path}):\n{tail}"
+        )
     with open(out_json, encoding="utf-8") as f:
         return json.load(f)
 
